@@ -60,6 +60,8 @@ object IndexBuild {
   * Usage: `runMain graft.Search <sfDir> <indexPath> <query> [page]`
   */
 object Search {
+  private val MaxPages = 100
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, indexPath, query) = args.take(3)
     val page = if (args.length > 3) args(3).toInt else 1
@@ -71,18 +73,17 @@ object Search {
         spark.read.parquet(s"$indexPath.stopwords").collect().map(_.getString(0)).toSeq)
       catch { case _: Exception => Set.empty }
 
-    val ranked = SearchEngine.search(query, index, docs, sw)
+    val ranked = SearchEngine.search(query, index, docs, sw, materializeSlice = false)
     // Bounded driver memory: the total hit count is an aggregate (no
     // rows cross the driver) and only the one rendered page is ever
-    // collected — a 100 TB result set cannot OOM the CLI; maxPages just
+    // collected — a 100 TB result set cannot OOM the CLI; MaxPages just
     // caps how deep pagination may reach.
-    val maxPages = sys.env.getOrElse("SPARK_GRAFT_MAX_PAGES", "100").toInt
     val total = ranked.count()
     val totalPagesL = (total + SearchEngine.PageSize - 1) / SearchEngine.PageSize
     val totalPages = math.min(totalPagesL, Int.MaxValue.toLong).toInt
     println(s"$total/$totalPagesL")
     val pageDf = SearchEngine.page(ranked,
-      math.min(page, math.max(math.min(totalPages, maxPages), 1)))
+      math.min(page, math.max(math.min(totalPages, MaxPages), 1)))
     // stored-corpus view: first line is the title (reference convention).
     // Derived directly from the documents table — same page frame the
     // XML path produces (titles are "doc-<id>" by the dump convention),

@@ -1,7 +1,6 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end batch search: the Spark restatement of the reference's
@@ -9,9 +8,8 @@ import org.apache.spark.sql.functions._
   * `util/CorpusFetcher.java:73-118`): parse -> prune -> evaluate the
   * boolean algebra as joins -> rank -> paginate -> fetch docs -> snippet
   * and highlight. The reference's single-reducer evaluation becomes a
-  * distributed join tree; pagination is a window over an already
-  * top-k-limited result, never a global single-partition sort of the full
-  * result set.
+  * distributed join tree; pagination is a top-k with an offset, never a
+  * global single-partition sort of the full result set.
   */
 object SearchEngine {
 
@@ -115,19 +113,15 @@ object SearchEngine {
             .select(lit(q).as("query"), col("doc_id"), col("score")))
         .reduce(_ unionByName _)
 
-  /** One result page (1-based `page`): top `page*PageSize` rows only are
-    * ever sorted/collected (TakeOrdered), then the window numbers that
-    * small prefix. Mirrors `SearchResult` paging + overflow clamp to the
+  /** One result page (1-based `page`): rows `(page-1)*PageSize+1 ..
+    * page*PageSize` of the ranking, planned as one TakeOrdered with an
+    * offset, so only the top `page*PageSize` rows are ever sorted or
+    * collected. Mirrors `SearchResult` paging + overflow clamp to the
     * last page (`util/SearchResult.java:33-46`, `util/CorpusFetcher
     * .java:88` — clamping is the caller's job here via `count`).
     */
-  def page(ranked: DataFrame, page: Int): DataFrame = {
-    val w = Window.orderBy(desc("score"), asc("doc_id"))
-    ranked.limit(page * PageSize)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") > (page - 1) * PageSize)
-      .drop("rn")
-  }
+  def page(ranked: DataFrame, page: Int): DataFrame =
+    ranked.offset((page - 1) * PageSize).limit(PageSize)
 
   /** F7: HTML entity decode of the stored-HTML corpus variant
     * (`util/CorpusFetcher.java:255`).

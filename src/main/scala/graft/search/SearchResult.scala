@@ -20,10 +20,8 @@ final case class SearchResult(count: Int, pages: Vector[Vector[Long]]) {
 }
 
 object SearchResult {
-  val PageSize = 10 // util/SearchResult.java:42
-
   def fromRanked(count: Int, docIds: Seq[Long]): SearchResult =
-    SearchResult(count, docIds.grouped(PageSize).map(_.toVector).toVector)
+    SearchResult(count, docIds.grouped(SearchEngine.PageSize).map(_.toVector).toVector)
 
   def decode(s: String): SearchResult = {
     val parts = s.split(";")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -144,6 +145,15 @@ class PlanAuditSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       offenders.map { case (n, why) => s"$n: $why" }.mkString("\n"))
+  }
+
+  test("paged search entries plan no single-partition window") {
+    val dir = sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata") +
+      "/sf0.001"
+    for (name <- Seq("search_page1", "search_snippets")) {
+      val nodes = allNodes(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+      assert(!nodes.exists(_.isInstanceOf[WindowExec]), s"$name plans a WindowExec")
+    }
   }
 
   test("no query plans an accidental cartesian / nested-loop join; " +

@@ -126,6 +126,22 @@ class SparkIntegrationSpec extends AnyFunSuite {
     val all = ranked.collect().map(r => (r.getLong(0), r.getDouble(1)))
     val p2 = SearchEngine.page(ranked, 2).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(p2.toSeq == all.slice(10, 20).toSeq)
+
+    // 25 hand-built rows: eight distinct top scores, then five equal
+    // scores at ranks 9-13 straddling the page 1/2 boundary, then twelve
+    // distinct low scores; pages are the (score desc, doc_id asc) slices
+    val above = Seq(2L, 5L, 7L, 14L, 16L, 19L, 23L, 24L)
+    val tied = Set(4L, 9L, 13L, 18L, 21L)
+    val rows = (1L to 25L).map(id =>
+      (id, if (above.contains(id)) 10.0 + id else if (tied(id)) 2.0 else 1.0 / id))
+    val want = rows.sortBy { case (id, sc) => (-sc, id) }
+    import spark.implicits._
+    val hand = rows.reverse.toDF("doc_id", "score").repartition(3)
+      .orderBy(desc("score"), asc("doc_id"))
+    for (p <- 1 to 4) {
+      val got = SearchEngine.page(hand, p).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      assert(got.toSeq == want.slice((p - 1) * 10, p * 10), s"page $p")
+    }
   }
 
   test("index write/read round trip prunes on term") {
@@ -381,7 +397,7 @@ class SparkIntegrationSpec extends AnyFunSuite {
     val second = cache.searchCached("spark and data", index, docs)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(first == second && first.nonEmpty)
-    // re-put is idempotent (dynamic partition overwrite, no dup rows)
+    // re-put is idempotent (the query's directory is overwritten, no dup rows)
     cache.put("spark and data",
       SearchEngine.search("spark and data", index, docs))
     assert(cache.get("spark and data").get.count() == first.size)
@@ -390,6 +406,30 @@ class SparkIntegrationSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     val hit = cache.get("spark and data").get.collect().map(_.getLong(0)).toSeq
     assert(hit == live)
+
+    // an empty result is stored like any other: the repeat is a hit
+    assert(cache.searchCached("zzzqqx", index, docs).count() == 0)
+    assert(cache.get("zzzqqx").isDefined)
+    assert(cache.searchCached("zzzqqx", index, docs).count() == 0)
+
+    // with more than 32 entries, a probe (hit or miss) starts no Spark job
+    val one = spark.range(1).select(col("id").as("doc_id"), lit(1.0).as("score"))
+    (1 to 33).foreach(i => cache.put(s"filler $i", one))
+    val sc = spark.sparkContext
+    sc.setJobGroup("qcache-probe", "cache probes")
+    try {
+      assert(cache.get("spark and data").isDefined)
+      assert(cache.get("never stored").isEmpty)
+    } finally sc.clearJobGroup()
+    // listener events arrive in order: once a later job is visible, any
+    // job the probes started would be too
+    sc.setJobGroup("qcache-sentinel", "sentinel")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup("qcache-sentinel").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup("qcache-sentinel").nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup("qcache-probe").isEmpty)
   }
 
   test("search compiler runs unchanged over a BM25-scored index") {
