@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.search.{Indexer, QueryParser, SearchEngine}
 
@@ -62,16 +61,23 @@ object IndexBuild {
 object Search {
   private val MaxPages = 100
 
+  /** The index's stemmed stop words. [[IndexBuild]] writes the table only
+    * for a non-empty list, so a missing one is empty; a read error fails.
+    */
+  private[graft] def stopWords(spark: SparkSession, indexPath: String): Set[String] = {
+    val path = new org.apache.hadoop.fs.Path(s"$indexPath.stopwords")
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) Set.empty
+    else QueryParser.stemmedStopWords(
+      spark.read.parquet(path.toString).collect().map(_.getString(0)).toSeq)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, indexPath, query) = args.take(3)
     val page = if (args.length > 3) args(3).toInt else 1
     val spark = Cli.session("graft-search")
     val docs = Indexer.documents(spark, sfDir)
     val index = Indexer.readIndex(spark, indexPath)
-    val sw: Set[String] =
-      try QueryParser.stemmedStopWords(
-        spark.read.parquet(s"$indexPath.stopwords").collect().map(_.getString(0)).toSeq)
-      catch { case _: Exception => Set.empty }
+    val sw = stopWords(spark, indexPath)
 
     val ranked = SearchEngine.search(query, index, docs, sw, materializeSlice = false)
     // Bounded driver memory: the total hit count is an aggregate (no
@@ -84,15 +90,8 @@ object Search {
     println(s"$total/$totalPagesL")
     val pageDf = SearchEngine.page(ranked,
       math.min(page, math.max(math.min(totalPages, MaxPages), 1)))
-    // stored-corpus view: first line is the title (reference convention).
-    // Derived directly from the documents table — same page frame the
-    // XML path produces (titles are "doc-<id>" by the dump convention),
-    // without serializing to <page> XML and re-parsing it (one fewer
-    // scan; byte-identical output, checked on the smoke corpus).
-    val corpus = graft.sources.Corpus.split(
-      docs.select(col("doc_id"),
-        concat(lit("doc-"), col("doc_id")).as("title"), col("text")), "text")
-    SearchEngine.renderCorpusPage(pageDf, corpus, query).collect().foreach { r =>
+    SearchEngine.renderCorpusPage(pageDf,
+        graft.sources.Corpus.fromDocuments(docs), query).collect().foreach { r =>
       print(s"${r.getLong(0)}\n${r.getString(2)}\n${r.getString(3)}$$RST$$")
     }
     println()

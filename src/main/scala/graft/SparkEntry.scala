@@ -1829,7 +1829,8 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val q = "spark and data"
       val ranked = SearchEngine.search(q, cachedIndex(s, dir), docs)
-      val rendered = SearchEngine.renderPage(SearchEngine.page(ranked, 1), docs, q)
+      val rendered = SearchEngine.renderCorpusPage(SearchEngine.page(ranked, 1),
+          graft.sources.Corpus.fromDocuments(docs), q)
         .select(col("doc_id"), col("snippet"))
       val stripped = replace(replace(col("snippet"),
         lit("<span style=\"background-color: #FFFF00\">")), lit("</span>"))

@@ -180,7 +180,7 @@ object PostingAlgebra {
     case QueryAst.And(cs)       => nAryAnd(cs.map(evaluate(_, index)))
     case QueryAst.Or(cs, negated) =>
       val r = nAryOr(cs.map(evaluate(_, index)))
-      if (negated) r.copy(tpe = 1 - r.tpe) else r
+      if (negated) r.copy(tpe = QueryAst.flip(r.tpe)) else r
   }
 
   /** Rank by score descending; stable, so equal scores keep docId order

@@ -28,6 +28,11 @@ object QueryAst {
     * (type 2, `util/QueryParser.java:82-85,104`).
     */
   case object StopWord extends QueryAst
+
+  /** `not` on an evaluated wrapper's type (0 normal / 1 negated / 2 stop
+    * word): swaps 0 and 1; a stop word stays an identity (SURVEY J4, Q4).
+    */
+  def flip(tpe: Int): Int = if (tpe == 2) 2 else 1 - tpe
 }
 
 /** CNF parser, replicating the reference grammar exactly

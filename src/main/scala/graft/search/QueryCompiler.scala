@@ -121,16 +121,14 @@ object QueryCompiler {
     else if (a.tpe == 1) Node(0, differenceDf(b, a), hasPositions = false, b.est)
     else Node(0, differenceDf(a, b), hasPositions = false, a.est)
 
-  /** J5: negation-aware OR type dispatch (`util/QueryParser.java:281-298`). */
+  private def flipNode(n: Node): Node = n.copy(tpe = flip(n.tpe))
+
+  /** J5 (`util/QueryParser.java:281-298`) as the De Morgan dual of J4,
+    * `a or b = not (not a and not b)`: equal to the reference's table
+    * (kept in [[PostingAlgebra]]) for all nine type pairs.
+    */
   private def combineOr(a: Node, b: Node): Node =
-    if (a.tpe == 2 && b.tpe == 2) a
-    else if (a.tpe == 2) b
-    else if (b.tpe == 2) a
-    else if (a.tpe == 1 && b.tpe == 1)
-      Node(1, intersectDf(a, b), hasPositions = false, math.min(a.est, b.est))
-    else if (a.tpe == 0 && b.tpe == 0) Node(0, mergeDf(a, b), hasPositions = false, a.est + b.est)
-    else if (a.tpe == 1) Node(1, differenceDf(a, b), hasPositions = false, a.est)
-    else Node(1, differenceDf(b, a), hasPositions = false, b.est)
+    flipNode(combineAnd(flipNode(a), flipNode(b)))
 
   private def stripPositions(n: Node): Node =
     Node(n.tpe, n.df.select(col("doc_id"), col("score")), hasPositions = false, n.est)
@@ -209,7 +207,7 @@ object QueryCompiler {
         if (cs.isEmpty) emptyNode
         else {
           val r = nAryOr(cs.map(go))
-          if (negated) r.copy(tpe = 1 - r.tpe) else r
+          if (negated) flipNode(r) else r
         }
     }
     go(ast)

@@ -1,5 +1,7 @@
 package graft.search
 
+import java.util.regex.{Matcher, Pattern}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -189,15 +191,17 @@ object SearchEngine {
 
   /** F10: wrap each highlight word (and its Capitalized form) in the
     * reference's yellow span (`util/CorpusFetcher.java:121-122,186-190`).
+    * Words are quoted: `(data` or `c++` match literally, never as regex.
     */
   private[graft] def highlightWrap(text: String, highlights: Seq[String]): String = {
     val start = "<span style=\"background-color: #FFFF00\">"
     val end = "</span>"
     var result = text
     for (h <- highlights if h.nonEmpty) {
-      result = result.replaceAll("\\b" + h + "\\b", start + h + end)
       val cap = h.substring(0, 1).toUpperCase + h.substring(1)
-      result = result.replaceAll("\\b" + cap + "\\b", start + cap + end)
+      for (w <- Seq(h, cap))
+        result = result.replaceAll("\\b" + Pattern.quote(w) + "\\b",
+          Matcher.quoteReplacement(start + w + end))
     }
     result
   }
@@ -210,22 +214,14 @@ object SearchEngine {
     graft.functions.SnippetHighlight.of(content,
       array(highlights.map(lit): _*).cast("array<string>"))
 
-  /** J9 + F9/F10/F11: join a ranked page with the corpus (the result side
-    * is tiny -> broadcast, the reference's loop of MapFile point-gets)
-    * and render highlighted snippets.
-    */
-  def renderPage(pageDf: DataFrame, docs: DataFrame, query: String): DataFrame = {
-    val highlights = QueryParser.highlightWords(query)
-    docs.join(broadcast(pageDf), "doc_id")
-      .select(col("doc_id"), col("score"),
-        snippetCol(col("text"), highlights).as("snippet"))
-      .orderBy(desc("score"), asc("doc_id"))
-  }
-
-  /** Render a page against a STORED corpus `(doc_id, content)` where the
-    * first line is the title (the reference's on-disk convention,
-    * `util/CorpusFetcher.java:106-107`): extract the title, snippet the
-    * body. Returns `(doc_id, score, title, snippet)`.
+  /** J9 + F8-F11: render one page against a STORED corpus `(doc_id,
+    * content)` whose first line is the title (`util/CorpusFetcher
+    * .java:106-107`; [[graft.sources.Corpus.fromDocuments]]): broadcast-join
+    * the page (the reference's MapFile point-gets), split off the title,
+    * snippet and highlight the body. `pageDf` is one page (at most
+    * `PageSize` rows, as [[page]] returns), so the re-rank is a top-k: no
+    * range exchange re-scanning the corpus. Returns `(doc_id, score, title,
+    * snippet)`.
     */
   def renderCorpusPage(pageDf: DataFrame, corpus: DataFrame, query: String): DataFrame = {
     val highlights = QueryParser.highlightWords(query)
@@ -234,7 +230,7 @@ object SearchEngine {
     corpus.join(broadcast(pageDf), "doc_id")
       .select(col("doc_id"), col("score"), title.as("title"),
         snippetCol(body, highlights).as("snippet"))
-      .orderBy(desc("score"), asc("doc_id"))
+      .orderBy(desc("score"), asc("doc_id")).limit(PageSize)
   }
 
   /** S8: point lookup of one document — pushdown predicate on the corpus

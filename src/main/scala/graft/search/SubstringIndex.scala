@@ -25,41 +25,46 @@ import org.apache.spark.sql.functions._
   */
 object SubstringIndex {
 
+  /** Gram width n: trigrams, the pg_trgm choice. */
+  val GramWidth = 3
+
   /** Distinct lowercase n-gram postings `(gram, doc_id)`. Sliding
     * windows are generated map-side (`transform` over an index
     * `sequence` — codegen'd, no UDF); `array_distinct` collapses
     * within-doc repeats BEFORE the explode so the shuffle carries each
     * (doc, gram) once, not once per occurrence.
     */
-  def trigramPostings(docs: DataFrame, n: Int = 3): DataFrame = {
-    require(n >= 2, s"n must be >= 2: $n")
+  def trigramPostings(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), lower(col("text")).as("__t"))
       .select(col("doc_id"),
-        explode(array_distinct(when(length(col("__t")) >= n,
-            expr(s"transform(sequence(1, length(__t) - ${n - 1}), " +
-              s"i -> substring(__t, i, $n))"))
+        explode(array_distinct(when(length(col("__t")) >= GramWidth,
+            expr(s"transform(sequence(1, length(__t) - ${GramWidth - 1}), " +
+              s"i -> substring(__t, i, $GramWidth))"))
           .otherwise(array().cast("array<string>")))).as("gram"))
-  }
 
   /** The needle's required gram set (consecutive windows, deduped).
     * Empty when the needle is shorter than n.
     */
-  def requiredGrams(needle: String, n: Int = 3): Seq[String] =
-    needle.toLowerCase.sliding(n).filter(_.length == n).toSeq.distinct
+  def requiredGrams(needle: String): Seq[String] =
+    needle.toLowerCase.sliding(GramWidth).filter(_.length == GramWidth).toSeq.distinct
 
   /** Candidate doc ids: contain ALL required grams. The gram set is
     * needle-sized — always broadcast; the posting join partial-
     * aggregates per doc before the count check.
     */
-  def candidates(postings: DataFrame, needle: String, n: Int = 3): DataFrame = {
-    val grams = requiredGrams(needle, n)
+  def candidates(postings: DataFrame, needle: String): DataFrame = {
+    val grams = requiredGrams(needle)
     require(grams.nonEmpty,
-      s"needle '$needle' is shorter than the gram width $n — no gram to " +
+      s"needle '$needle' is shorter than the gram width $GramWidth — no gram to " +
         "require; use SubstringIndex.search, which scan-falls-back explicitly")
+    withAllGrams(postings, grams)
+  }
+
+  /** Doc ids whose postings hold every gram of `grams` (non-empty). */
+  private def withAllGrams(postings: DataFrame, grams: Seq[String]): DataFrame = {
     val spark = postings.sparkSession
     import spark.implicits._
-    val need = grams.toDF("gram")
-    postings.join(broadcast(need), "gram")
+    postings.join(broadcast(grams.toDF("gram")), "gram")
       .groupBy("doc_id").agg(count(lit(1)).as("__hits"))
       .filter(col("__hits") === grams.size)
       .select("doc_id")
@@ -69,11 +74,10 @@ object SubstringIndex {
     * an explicit corpus scan when the needle is too short to index.
     * Output is exactly the brute-force `LIKE '%needle%'` row set.
     */
-  def search(docs: DataFrame, postings: DataFrame, needle: String,
-             n: Int = 3): DataFrame = {
+  def search(docs: DataFrame, postings: DataFrame, needle: String): DataFrame = {
     val verified =
-      if (requiredGrams(needle, n).isEmpty) docs
-      else docs.join(candidates(postings, needle, n), "doc_id")
+      if (requiredGrams(needle).isEmpty) docs
+      else docs.join(candidates(postings, needle), "doc_id")
     verified
       .filter(contains(lower(col("text")), lit(needle.toLowerCase)))
       .select(col("doc_id"))
@@ -93,11 +97,10 @@ object SubstringIndex {
     * existing index through one anti-join (batch id set broadcast-
     * sized); nothing corpus-sized shuffles.
     */
-  def mergePostings(existing: DataFrame, newDocs: DataFrame,
-                    n: Int = 3): DataFrame = {
+  def mergePostings(existing: DataFrame, newDocs: DataFrame): DataFrame = {
     val newIds = newDocs.select("doc_id").distinct()
     existing.join(newIds, Seq("doc_id"), "left_anti")
-      .unionByName(trigramPostings(newDocs, n))
+      .unionByName(trigramPostings(newDocs))
   }
 
   /** At-rest incremental maintenance: read the existing index, merge
@@ -107,9 +110,9 @@ object SubstringIndex {
     * directory being probed).
     */
   def mergeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                 outPath: String, newDocs: DataFrame, n: Int = 3,
+                 outPath: String, newDocs: DataFrame,
                  numFiles: Int = 64): Unit =
-    writeIndex(mergePostings(spark.read.parquet(path), newDocs, n),
+    writeIndex(mergePostings(spark.read.parquet(path), newDocs),
       outPath, numFiles)
 
   /** Write the posting table at rest, range-partitioned and sorted by
@@ -130,10 +133,10 @@ object SubstringIndex {
     * candidate semantics as [[candidates]].
     */
   def probeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                 needle: String, n: Int = 3): DataFrame = {
-    val grams = requiredGrams(needle, n)
+                 needle: String): DataFrame = {
+    val grams = requiredGrams(needle)
     require(grams.nonEmpty,
-      s"needle '$needle' is shorter than the gram width $n")
+      s"needle '$needle' is shorter than the gram width $GramWidth")
     spark.read.parquet(path)
       .filter(col("gram").isin(grams: _*))
       .groupBy("doc_id").agg(count(lit(1)).as("__hits"))
@@ -159,26 +162,16 @@ object SubstringIndex {
     * would read an escaped wildcard as a wildcard while the `like`
     * verify reads it as a literal, and the two must agree.
     */
-  def searchLike(docs: DataFrame, postings: DataFrame, pattern: String,
-                 n: Int = 3): DataFrame = {
+  def searchLike(docs: DataFrame, postings: DataFrame, pattern: String): DataFrame = {
     require(!pattern.contains("\\"),
       s"LIKE pattern '$pattern' contains an escape character — escape " +
         "sequences are not supported by the trigram probe")
     val lowered = pattern.toLowerCase
     val grams = lowered.split(Array('%', '_')).filter(_.nonEmpty).toSeq
-      .flatMap(requiredGrams(_, n)).distinct
+      .flatMap(requiredGrams).distinct
     val verified =
       if (grams.isEmpty) docs
-      else {
-        val spark = postings.sparkSession
-        import spark.implicits._
-        val need = grams.toDF("gram")
-        val cand = postings.join(broadcast(need), "gram")
-          .groupBy("doc_id").agg(count(lit(1)).as("__hits"))
-          .filter(col("__hits") === grams.size)
-          .select("doc_id")
-        docs.join(cand, "doc_id")
-      }
+      else docs.join(withAllGrams(postings, grams), "doc_id")
     verified.filter(lower(col("text")).like(lowered)).select(col("doc_id"))
   }
 }

@@ -36,6 +36,13 @@ object Corpus {
       concat(col("title"), lit("\n"), body).as("content"))
   }
 
+  /** The stored text corpus of a documents table: records titled
+    * `doc-<id>` (the dump convention the XML path yields), split as ctype 0.
+    */
+  def fromDocuments(docs: DataFrame): DataFrame =
+    split(docs.select(col("doc_id"),
+      concat(lit("doc-"), col("doc_id")).as("title"), col("text")), "text")
+
   /** First line of a stored record = the title
     * (`util/CorpusFetcher.java:106`).
     */

@@ -59,6 +59,28 @@ class PresentationSpec extends AnyFunSuite {
     assert(!out.contains(span + "sparkle"))
   }
 
+  test("highlight wrap treats query words literally, never as regex") {
+    val span = "<span style=\"background-color: #FFFF00\">"
+    def strip(s: String) = s.replace(span, "").replace("</span>", "")
+    // an unbalanced parenthesis survives highlightWords and used to fail
+    // the render with a PatternSyntaxException
+    for (q <- Seq("spark and (data", "spark and data)")) {
+      val hl = QueryParser.highlightWords(q)
+      assert(hl.exists(_.exists("()".contains(_))), hl)
+      val text = "spark (data) tools"
+      assert(strip(SearchEngine.highlightWrap(text, hl)) == text, q)
+    }
+    // regex metacharacters match literally: c++ is wrapped once and the
+    // text is otherwise unchanged (the unquoted pattern re-emitted "++")
+    val text = "c++11 and c++ and C++11"
+    val out = SearchEngine.highlightWrap(text, Seq("c++"))
+    assert(strip(out) == text)
+    assert(out.contains(span + "c++</span>11"))
+    // `$` in a word is not a replacement group reference
+    assert(strip(SearchEngine.highlightWrap("pay us$1 now", Seq("us$1"))) ==
+      "pay us$1 now")
+  }
+
   test("highlight words: positive literals only, double negation flips") {
     // un-negated words kept, 'not x' dropped
     assert(QueryParser.highlightWords("vanilla and not chocolate") == Vector("vanilla"))

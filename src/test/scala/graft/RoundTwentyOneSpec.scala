@@ -195,21 +195,43 @@ class RoundTwentyOneSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon"),
       (2L, ("filler " * 80) + "alpha " + ("pad " * 70) + "beta end"),
-      (3L, "unrelated words only here")).toDF("doc_id", "text")
+      (3L, "unrelated words only here"),
+      (4L, "beta alpha"),
+      (5L, "alpha beta")).toDF("doc_id", "text")
     val index = graft.search.Indexer.postings(docs)
     val ranked = graft.search.SearchEngine.search("alpha beta", index, docs)
     val page = graft.search.SearchEngine.page(ranked, 1)
-    val rendered = graft.search.SearchEngine.renderPage(page, docs, "alpha beta")
-    val plan = rendered.queryExecution.executedPlan.toString
-    assert(!plan.contains("UDF"), s"page render still plans a UDF:\n$plan")
+    val rendered = graft.search.SearchEngine.renderCorpusPage(page,
+      graft.sources.Corpus.fromDocuments(docs), "alpha beta")
+    val rows = rendered.collect()
+    val plan = rendered.queryExecution.executedPlan
+    assert(!plan.toString.contains("UDF"), s"page render still plans a UDF:\n$plan")
+    // the page's own top-k re-ranks it: no range exchange (and so no
+    // sampling job over the corpus) and no global sort
+    val nodes = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) { case n => n }
+    assert(nodes.exists {
+      case t: org.apache.spark.sql.execution.TakeOrderedAndProjectExec =>
+        t.output.map(_.name).contains("snippet")
+      case _ => false
+    }, plan)
+    assert(!nodes.exists {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+        e.outputPartitioning
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RangePartitioning]
+      case _ => false
+    }, plan)
+    val order = rows.map(r => (-r.getDouble(1), r.getLong(0))).toSeq
+    assert(order == order.sorted, order)
     val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val hl = graft.search.QueryParser.highlightWords("alpha beta")
-    val got = rendered.collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-    assert(got.nonEmpty)
-    got.foreach { case (id, snippet) =>
+    assert(rows.map(_.getLong(0)).toSet == Set(1L, 2L, 4L, 5L))
+    rows.foreach { r =>
+      val id = r.getLong(0)
+      assert(r.getString(2) == s"doc-$id")
       val want = graft.search.SearchEngine.highlightWrap(
         graft.search.SearchEngine.snippetOf(texts(id), hl), hl)
-      assert(snippet === want, s"doc $id")
+      assert(r.getString(3) === want, s"doc $id")
     }
     // NULL content renders NULL (the old closure-UDF contract)
     import org.apache.spark.sql.catalyst.expressions.Literal

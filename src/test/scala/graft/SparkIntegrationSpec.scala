@@ -38,19 +38,7 @@ class SparkIntegrationSpec extends AnyFunSuite {
   def checkAgainstLocal(query: String, stopWords: Set[String] = Set.empty): Unit = {
     val ast = new QueryParser(stopWords).parse(query.toLowerCase)
     val terms = QueryCompiler.leafTerms(ast)
-    // local: postings as delta-encoded, string-docId, docId-sorted lists
-    val local = index.filter(col("term").isin(terms.distinct: _*))
-      .select("term", "doc_id", "score", "positions").collect()
-      .groupBy(_.getString(0))
-      .map { case (term, rows) =>
-        term -> rows.map { r =>
-          val abs = r.getSeq[Int](3).toVector
-          val deltas = abs.zip(0 +: abs.dropRight(1)).map { case (a, b) => a - b }
-          (r.getLong(1), r.getDouble(2), deltas)
-        }.sortBy(_._1).toVector
-          .map { case (id, s, d) => PostingAlgebra.Posting(f"$id%06d", s, d) }
-      }
-    val expected = PostingAlgebra.evaluate(ast, local)
+    val expected = PostingAlgebra.evaluate(ast, localPostings(terms))
     val stats = QueryCompiler.termStats(index, terms)
     val node = QueryCompiler.compile(ast, index, stats)
     assert(node.tpe == expected.tpe, s"wrapper type for '$query'")
@@ -62,6 +50,22 @@ class SparkIntegrationSpec extends AnyFunSuite {
         (s.isInfinity && got(id).isInfinity), s"score of doc $id for '$query'")
   }
 
+  /** The index's postings for `terms` as the in-memory algebra's
+    * delta-encoded, string-docId, docId-sorted lists.
+    */
+  def localPostings(terms: Seq[String]): Map[String, Vector[PostingAlgebra.Posting]] =
+    index.filter(col("term").isin(terms.distinct: _*))
+      .select("term", "doc_id", "score", "positions").collect()
+      .groupBy(_.getString(0))
+      .map { case (term, rows) =>
+        term -> rows.map { r =>
+          val abs = r.getSeq[Int](3).toVector
+          val deltas = abs.zip(0 +: abs.dropRight(1)).map { case (a, b) => a - b }
+          (r.getLong(1), r.getDouble(2), deltas)
+        }.sortBy(_._1).toVector
+          .map { case (id, s, d) => PostingAlgebra.Posting(f"$id%06d", s, d) }
+      }
+
   test("distributed compiler matches in-memory algebra on real corpus") {
     checkAgainstLocal("spark and data")
     checkAgainstLocal("spark or data")
@@ -72,10 +76,35 @@ class SparkIntegrationSpec extends AnyFunSuite {
     checkAgainstLocal("fast key order") // 3-word phrase
     checkAgainstLocal("spark and missingterm or data")
     checkAgainstLocal("the and spark", stopWords = Set("the"))
-    // NOT_OR over a stop word flips type 2 -> -1 (reference quirk kept);
-    // the -1 wrapper must fall through the dispatch like the reference's
+    // NOT_OR over a stop word stays type 2: an identity operand
     checkAgainstLocal("spark and not (the)", stopWords = Set("the"))
     checkAgainstLocal("not (the) or data", stopWords = Set("the"))
+  }
+
+  test("a negated stop-word clause is an identity: 'spark and not the' = 'spark'") {
+    val sw = Set("the")
+    def rows(q: String) = SearchEngine.search(q, index, docs, sw).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val want = rows("spark")
+    assert(want.nonEmpty)
+    assert(rows("spark and not the") == want)
+    val parser = new QueryParser(sw)
+    val local = localPostings(Seq("spark"))
+    def oracle(q: String) = PostingAlgebra.evaluate(parser.parse(q), local)
+    assert(oracle("spark and not the") == oracle("spark"))
+    assert(oracle("spark").postings.nonEmpty)
+  }
+
+  test("graft.Search stop words: missing table empty, written table stemmed, bad table throws") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sw-").toString
+    assert(Search.stopWords(spark, s"$dir/none") == Set.empty)
+    import spark.implicits._
+    Seq("running", "the").toDF("word").write.parquet(s"$dir/idx.stopwords")
+    assert(Search.stopWords(spark, s"$dir/idx") ==
+      QueryParser.stemmedStopWords(Seq("running", "the")))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/bad.stopwords"),
+      "not parquet".getBytes("UTF-8"))
+    intercept[Exception](Search.stopWords(spark, s"$dir/bad"))
   }
 
   test("ngram jaccard: maxShingleFreq guard drops hot shingles from candidates") {
